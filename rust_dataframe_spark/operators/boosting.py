@@ -75,11 +75,11 @@ def boosted_stumps(
         F.col(x2_col).cast("double").alias("x2"),
         F.col(y_col).cast("bigint").alias("y"),
     )
-    from .cache import persist_tracked as _pt
-
-    # 1-row frame, but each broadcast reference re-scans the corpus to
-    # recompute it (it appears in the cell-table lineage AND the final
-    # output row) — persist so the min/max pass runs once.
+    # 1-row frame, referenced twice (the cell-table lineage and the
+    # final output row), so the min/max pass runs twice.  Deliberately
+    # NOT persisted: an interleaved 3-rep A/B measured q369 at 5.10 s
+    # with the persist vs 4.81 s without (OPTIMIZATION_r13.md §2) —
+    # the persist job costs more than the cheap columnar re-scan.
     bounds = f.agg(
         F.min("x1").alias("lo1"),
         F.max("x1").alias("hi1"),

@@ -15,7 +15,9 @@ records of primitive fields — null / boolean / int / long / float /
 double / string / bytes — plus the 2-branch nullable union
 ``["null", <prim>]``; codecs ``null`` and ``deflate``.  That covers the
 interchange shapes the reference's IO layer handles (flat typed tables,
-io/datasource.rs); no enums/maps/arrays/nested records.
+io/datasource.rs).  Spark struct columns map to nested records (the
+Hudi log writer carries them); no enums, and the Spark schema mapping
+has no maps or arrays.
 
 Spark integration mirrors the Arrow-IPC pair in sources/files.py:
 
@@ -396,43 +398,50 @@ _AVRO_TO_SPARK = {v: k for k, v in _SPARK_TO_AVRO.items()}
 
 
 def spark_schema_to_avro(schema, name: str = "row") -> dict:
+    """Spark struct -> Avro record schema.  Primitive columns map via
+    ``_SPARK_TO_AVRO``; a struct column becomes a nested record named
+    ``{parent}_{column}`` (Avro names must be unique in one schema)."""
     fields = []
     for f in schema.fields:
         tn = f.dataType.typeName()
-        if tn not in _SPARK_TO_AVRO:
+        if tn == "struct":
+            at = spark_schema_to_avro(f.dataType, f"{name}_{f.name}")
+        elif tn in _SPARK_TO_AVRO:
+            at = _SPARK_TO_AVRO[tn]
+        else:
             raise AvroError(
                 f"column {f.name!r}: Spark type {tn} outside the supported "
-                "primitive subset (cast or drop it first)"
+                "subset of primitives and structs (cast or drop it first)"
             )
-        at = _SPARK_TO_AVRO[tn]
         fields.append({"name": f.name, "type": ["null", at] if f.nullable else at})
     return {"type": "record", "name": name, "fields": fields}
 
 
+def _avro_type_to_spark(name: str, typ) -> str:
+    at = typ[1] if isinstance(typ, list) else typ
+    if isinstance(at, dict) and at.get("type") == "record":
+        inner = ", ".join(
+            f"`{f['name']}`: {_avro_type_to_spark(f['name'], f['type'])}"
+            for f in at["fields"]
+        )
+        return f"struct<{inner}>"
+    if at == "null":
+        raise AvroError(f"column {name!r}: bare null type has no Spark analog")
+    if not isinstance(at, str) or at not in _AVRO_TO_SPARK:
+        raise AvroError(f"column {name!r}: Avro type {at!r} has no Spark mapping here")
+    return _AVRO_TO_SPARK[at]
+
+
 def avro_schema_to_spark(schema: dict) -> str:
-    """Avro record schema -> Spark DDL string."""
-    parts = []
-    for name, typ in _validate_schema(schema):
-        at = typ[1] if isinstance(typ, list) else typ
-        if at == "null":
-            raise AvroError(f"column {name!r}: bare null type has no Spark analog")
-        sp = _AVRO_TO_SPARK[at]
-        parts.append(f"`{name}` {sp}")
-    return ", ".join(parts)
+    """Avro record schema -> Spark DDL string (nested records become
+    structs)."""
+    return ", ".join(
+        f"`{name}` {_avro_type_to_spark(name, typ)}"
+        for name, typ in _validate_schema(schema)
+    )
 
 
 # ----------------------------- Spark integration ----------------------------
-
-
-_AVRO_TO_ARROW = {
-    "boolean": "bool_",
-    "int": "int32",
-    "long": "int64",
-    "float": "float32",
-    "double": "float64",
-    "string": "string",
-    "bytes": "binary",
-}
 
 
 def write_avro_dir(df: DataFrame, path: str, *, codec: str = "deflate") -> int:
@@ -495,10 +504,10 @@ def read_avro_dir(spark: SparkSession, path: str) -> DataFrame:
     meta, _pos = _read_meta(buf, 4)
     avro_schema = json.loads(meta["avro.schema"].decode())
     ddl = avro_schema_to_spark(avro_schema)
-    field_types = [
-        (name, (typ[1] if isinstance(typ, list) else typ))
-        for name, typ in _validate_schema(avro_schema)
-    ]
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    arrow_schema = to_arrow_schema(StructType.fromDDL(ddl))
 
     def _decode(batches):
         import pyarrow as pa
@@ -507,14 +516,7 @@ def read_avro_dir(spark: SparkSession, path: str) -> DataFrame:
             content = batch.column(0)
             for i in range(batch.num_rows):
                 _schema, rows = decode_records(content[i].as_py())
-                arrays, names = [], []
-                for name, at in field_types:
-                    pa_type = getattr(pa, _AVRO_TO_ARROW[at])()
-                    arrays.append(
-                        pa.array([r[name] for r in rows], type=pa_type)
-                    )
-                    names.append(name)
-                yield pa.RecordBatch.from_arrays(arrays, names=names)
+                yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
     raw = spark.read.format("binaryFile").load(os.path.join(path, "*.avro"))
     return raw.select("content").mapInArrow(_decode, schema=ddl)

@@ -59,12 +59,15 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructField, StructType
 
+from . import lakehouse_util
 from .lakehouse_util import (
+    arrow_table,
     assert_unique_basenames,
     attach_file_values,
+    driver_rows,
+    driver_types_ok,
     parse_conjuncts,
     range_survives,
-    tagged_rows,
     write_rows_hive_tmp,
 )
 
@@ -311,17 +314,6 @@ def _read_dv_positions(dv: dict, table_path: str) -> list[int]:
     return vals
 
 
-# Checkpoints at or under this byte budget replay DRIVER-SIDE via
-# pyarrow (a handful of ms) instead of ~4 small Spark jobs (~1.5-2 s of
-# fixed scheduling latency on every checkpoint-bootstrapped read).
-# Above it, the distributed DataFrame reconciliation below keeps the
-# 10^5-10^7-file posture.  Same adaptive-gate pattern as the field-id
-# footer probe (fieldid.py: driver under 64 files, mapInPandas above).
-_CP_DRIVER_BYTES = int(
-    os.environ.get("SPARK_GRAFT_CP_DRIVER_BYTES", 8 * 1024 * 1024)
-)
-
-
 class _CpFallback(Exception):
     """Driver-side checkpoint replay declined (size/feature) — use the
     distributed path."""
@@ -336,12 +328,14 @@ def _cp_driver_replay(
     same reconciliation (adds of every group minus all removes, last
     metaData wins, every protocol row checked, V2 top-level sidecars
     appended as another group), same loud ``max_live_files`` budget.
-    Raises :class:`_CpFallback` when any group exceeds the byte budget
-    or pyarrow is unavailable."""
-    try:
-        import pyarrow.parquet as pq
-    except ImportError as e:
-        raise _CpFallback from e
+
+    Checkpoints within ``lakehouse_util.DRIVER_BYTES`` replay here in a
+    handful of ms instead of ~4 small Spark jobs (~1.5-2 s of fixed
+    scheduling latency on every checkpoint-bootstrapped read).  Raises
+    :class:`_CpFallback` when any file exceeds that budget; the
+    distributed reconciliation then keeps the 10^5-10^7-file posture."""
+    import pyarrow.parquet as pq
+
     groups = [list(g) for g in parquet_groups]
     meta: dict | None = None
     adds: dict[str, dict] = {}
@@ -351,7 +345,7 @@ def _cp_driver_replay(
         gpaths = groups.pop(0)
         rows: list[dict] = []
         for p in gpaths:
-            if os.path.getsize(p) > _CP_DRIVER_BYTES:
+            if os.path.getsize(p) > lakehouse_util.DRIVER_BYTES:
                 raise _CpFallback
             rows.extend(pq.read_table(p).to_pylist())
         if len(rows) > 2 * max_live_files + 16:
@@ -920,7 +914,7 @@ def _commit0_meta(spark: SparkSession, path: str) -> dict:
     return meta
 
 
-def _file_stats(path: str, fallback_count: int | None) -> dict:
+def _file_stats(path: str) -> dict:
     """Per-file add-action stats (PROTOCOL.md 'Per-file Statistics'):
     numRecords from the parquet footer plus minValues/maxValues per
     column from the row-group statistics — footer-only, no data read.
@@ -928,10 +922,10 @@ def _file_stats(path: str, fallback_count: int | None) -> dict:
     column mapping, exactly the protocol's rule).  Only
     JSON-representable stat values are recorded; anything else is
     simply omitted (data skipping is advisory)."""
+    import pyarrow.parquet as pq
+
     stats: dict = {}
     try:
-        import pyarrow.parquet as pq
-
         md = pq.read_metadata(path)
         stats["numRecords"] = md.num_rows
         mins: dict = {}
@@ -954,8 +948,7 @@ def _file_stats(path: str, fallback_count: int | None) -> dict:
             stats["minValues"] = mins
             stats["maxValues"] = maxs
     except Exception:
-        if fallback_count is not None:
-            stats = {"numRecords": fallback_count}
+        pass  # unreadable footer: stats are optional in the protocol
     return stats
 
 
@@ -1188,34 +1181,20 @@ def write_delta_commit(
     # tagged rows ARE the file contents; only names (and id-mode field
     # ids) differ.  Equivalence pinned in tests/test_r13_opt.py; every
     # non-provable case falls back to the Spark job below.
-    _local = tagged_rows(df)
-    _wrote_fast = False
-    if _local is not None:
-        from pyspark.sql.types import StructType as _St
-
-        _cols = list(df.columns)
-        _pidx = [_cols.index(c) for c in partition_by]
-        _didx = [i for i, c in enumerate(_cols) if c not in partition_by]
-        _data_fields = [df.schema.fields[i] for i in _didx]
-        _data_schema = _St([
-            type(f)(phys_of.get(f.name, f.name), f.dataType, True)
-            for f in _data_fields
-        ])
-        _fids = (
-            {phys_of.get(c, c): ids_of[c]
-             for c in _cols if c not in partition_by}
+    local = driver_rows(df, partition_by)
+    if local is None or not write_rows_hive_tmp(
+        local,
+        StructType([
+            StructField(phys_of.get(f.name, f.name), f.dataType, True)
+            for f in df.schema.fields
+        ]),
+        tmp,
+        phys,
+        field_ids=(
+            {phys_of.get(c, c): ids_of[c] for c in df.columns}
             if cm_mode == "id" else None
-        )
-        _wrote_fast = write_rows_hive_tmp(
-            [tuple(r[i] for i in _didx) for r in _local],
-            _data_schema,
-            tmp,
-            phys,
-            [tuple(r[i] for i in _pidx) for r in _local]
-            if partition_by else None,
-            field_ids=_fids,
-        )
-    if not _wrote_fast:
+        ),
+    ):
         writer = out_df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*phys)
@@ -1226,25 +1205,6 @@ def write_delta_commit(
     # ``df`` (guide §1.2: don't compute things you throw away — the old
     # groupBy/count job re-ran the entire input plan, which for
     # compaction-shaped callers is the whole table rewrite twice).
-    # Only a pyarrow-less runtime still pays the count job (fallback).
-    try:
-        import pyarrow.parquet  # noqa: F401
-
-        _have_pa = True
-    except Exception:
-        _have_pa = False
-    if not _have_pa:
-        if partition_by:
-            counts = {
-                tuple(str(r[c]) for c in partition_by): r["cnt"]
-                for r in df.groupBy(*partition_by).agg(
-                    F.count(F.lit(1)).alias("cnt")
-                ).collect()
-            }
-        else:
-            counts = {(): df.count()}
-    else:
-        counts = {}
     # Spark Hive-escapes special chars in partition dir names
     # ('%' -> '%25', ':' -> '%3A', ...); discover the on-disk dirs and
     # map them back to values instead of predicting the escaping.  The
@@ -1274,8 +1234,6 @@ def write_delta_commit(
                 dir_of[vals] = "/".join(segs)
                 dirs[:] = []
     parts = sorted(dir_of)
-    if counts and set(counts) != set(parts):
-        raise DeltaError("writer: partition dir/count mismatch")
     if replace_partitions and version > 0:
         _, adds = delta_snapshot_files(spark, path)
         doomed = set(parts)
@@ -1319,10 +1277,9 @@ def write_delta_commit(
                 "modificationTime": ts,
                 "dataChange": True,
             }
-            add["stats"] = json.dumps(_file_stats(
-                os.path.join(full_dir, fname),
-                counts.get(pt) if len(files) == 1 else None,
-            ))
+            add["stats"] = json.dumps(
+                _file_stats(os.path.join(full_dir, fname))
+            )
             actions.append({"add": add})
     shutil.rmtree(tmp, ignore_errors=True)
     if txn is not None:
@@ -1368,15 +1325,13 @@ def _write_cp_parquet(spark, path, rows, ddl, out_path) -> None:
     round-trip jobs).  The arrow schema comes from the same DDL the
     old from_json path used, so Spark reads the file identically
     (pinned by tests/test_r12_opt.py).  Falls back to the original
-    Spark job if pyarrow is unavailable."""
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
+    Spark job for a row shape the arrow conversion cannot express."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-        struct = StructType.fromDDL(ddl)
-        schema = to_arrow_schema(struct)
+    try:
+        schema = to_arrow_schema(StructType.fromDDL(ddl))
         names = set(schema.names)
         clean = [
             {k: v for k, v in r.items() if k in names} for r in rows
@@ -1386,8 +1341,8 @@ def _write_cp_parquet(spark, path, rows, ddl, out_path) -> None:
         pq.write_table(tbl, out_path, compression="snappy")
         return
     except Exception:
-        # no pyarrow, or a row shape the arrow conversion cannot
-        # express — the Spark job below is always-correct (slower)
+        # a row shape the arrow conversion cannot express — the Spark
+        # job below is always-correct (slower)
         try:
             os.remove(out_path)
         except OSError:
@@ -1995,19 +1950,13 @@ def _cdf_rewrite_local(
     so expression semantics (null conditions, casts) are identical to
     the distributed path — then pyarrow writes the rewritten table
     file and the cdc file.  Returns False (caller runs the original
-    two-write-job path) when pyarrow or a type falls outside the
-    pinned whitelist."""
-    from .lakehouse_util import _FAST_DATA_TYPES
+    two-write-job path) when a type falls outside the pinned
+    whitelist (``lakehouse_util.driver_types_ok``)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StringType
 
-    for f in snap.schema.fields:
-        if f.dataType.typeName() not in _FAST_DATA_TYPES:
-            return False
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StringType, StructField, StructType
-    except Exception:
+    if not driver_types_ok(snap.schema):
         return False
     cols = snap.columns
     probe_cols = [F.col(f"`{c}`") for c in cols]
@@ -2079,14 +2028,9 @@ def _cdf_rewrite_local(
             (new_path, data_schema, new_rows),
             (cdc_path, cdc_schema, cdc_rows),
         ):
-            arrs = [
-                pa.array([r[i] for r in rws], type=schema.types[i])
-                for i in range(len(schema.names))
-            ]
             os.makedirs(os.path.dirname(out_path), exist_ok=True)
             pq.write_table(
-                pa.Table.from_arrays(arrs, schema=schema),
-                out_path, compression="snappy",
+                arrow_table(rws, schema), out_path, compression="snappy",
             )
     except Exception:
         for p in (new_path, cdc_path):
@@ -2128,16 +2072,17 @@ def _cdf_rewrite(
     fname = f"part-{version:05d}-000-{uuid.uuid4().hex[:12]}.parquet"
     cdc_name = f"cdc-{version:05d}-{uuid.uuid4().hex[:12]}.parquet"
     cdc_rel = f"{_CHANGE_DIR}/{cdc_name}"
-    # Size-gated driver path (same adaptive gate as the round-12
-    # checkpoint fast path): a CDF rewrite on a fixture-sized table
-    # used to cost TWO scans + TWO write jobs; under the gate ONE
-    # Spark job collects the columns plus the CONDITION/ASSIGNMENT
-    # values (still evaluated by Spark SQL — semantics untouched) and
-    # pyarrow writes both files driver-side.  At scale the gate never
-    # opens and the distributed rewrite below runs unchanged.
+    # Size-gated driver path (lakehouse_util.DRIVER_BYTES, the same
+    # budget as the checkpoint fast path): a CDF rewrite on a
+    # fixture-sized table used to cost TWO scans + TWO write jobs;
+    # under the gate ONE Spark job collects the columns plus the
+    # CONDITION/ASSIGNMENT values (still evaluated by Spark SQL —
+    # semantics untouched) and pyarrow writes both files driver-side.
+    # At scale the gate never opens and the distributed rewrite below
+    # runs unchanged.
     total_live = sum(int(a.get("size") or 0) for a in adds)
     done = False
-    if total_live <= _CP_DRIVER_BYTES:
+    if total_live <= lakehouse_util.DRIVER_BYTES:
         done = _cdf_rewrite_local(
             spark, path, snap, condition, assignments,
             os.path.join(path, fname),
@@ -2407,18 +2352,24 @@ def _compact_group_local(
     the group's files with pyarrow, drop each file's DV-tombstoned
     row positions (the same position sets ``_read_dv_positions``
     feeds the distributed anti-join), concatenate, write one snappy
-    parquet.  Returns the output size, or None (caller runs the
-    distributed rewrite) above the byte gate or on schema drift."""
-    try:
-        if sum(os.path.getsize(f) for f in files) > _CP_DRIVER_BYTES:
-            return None
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    parquet.  Only the DVs of ``files`` are decoded.  Returns the
+    output size, or None (caller runs the distributed rewrite) above
+    ``lakehouse_util.DRIVER_BYTES`` or on schema drift.  Raises
+    :class:`DeltaError` on a duplicate data-file basename, exactly as
+    the distributed branch does."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-        pos_of: dict[str, set] = {}
-        for p, dv in dv_of.items():
-            base = os.path.basename(_decode_path(p))
-            pos_of[base] = set(_read_dv_positions(dv, table_path))
+    if sum(map(os.path.getsize, files)) > lakehouse_util.DRIVER_BYTES:
+        return None
+    dv_by_file = {
+        os.path.join(path, _decode_path(p)): dv for p, dv in dv_of.items()
+    }
+    if dv_by_file:
+        assert_unique_basenames(
+            files, err_cls=DeltaError, tag="delta-optimize"
+        )
+    try:
         tables = []
         schema0 = None
         for f in files:
@@ -2427,7 +2378,8 @@ def _compact_group_local(
                 schema0 = tbl.schema
             elif tbl.schema != schema0:
                 return None  # schema drift: distributed path unifies
-            drop = pos_of.get(os.path.basename(f))
+            dv = dv_by_file.get(f)
+            drop = set(_read_dv_positions(dv, table_path)) if dv else None
             if drop:
                 keep = [i for i in range(tbl.num_rows) if i not in drop]
                 tbl = tbl.take(keep)

@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .lakehouse_util import (
     attach_file_values,
-    tagged_rows,
+    driver_rows,
     write_rows_hive_tmp,
 )
 
@@ -346,49 +346,22 @@ def write_hudi_commit(
     # Driver-side fast path for one-slice local fixture frames (guide
     # §5; same discipline as the Delta/Iceberg writers): the tagged
     # rows ARE the file contents, with the meta-field prepend/coalesce
-    # replicated value-for-value.  Equivalence pinned in
-    # tests/test_r13_opt.py; non-provable cases fall back to the Spark
-    # job below.
-    _local = tagged_rows(df)
-    _wrote_fast = False
-    if _local is not None:
-        from pyspark.sql.types import StringType as _StrT
-        from pyspark.sql.types import StructField as _Sf
-        from pyspark.sql.types import StructType as _St
-
-        _cols = list(df.columns)
-        _fields = list(df.schema.fields)
-        _rows = [tuple(r) for r in _local]
-        if meta_fields:
-            if "_hoodie_commit_time" in _cols:
-                _hidx = _cols.index("_hoodie_commit_time")
-                _rows = [
-                    tuple(
-                        (v if v is not None else str(ts))
-                        if i == _hidx else v
-                        for i, v in enumerate(r)
-                    )
-                    for r in _rows
-                ]
-            else:
-                _cols = ["_hoodie_commit_time"] + _cols
-                _fields = [
-                    _Sf("_hoodie_commit_time", _StrT(), True)
-                ] + _fields
-                _rows = [(str(ts),) + r for r in _rows]
-        _pidx = [_cols.index(c) for c in partition_by]
-        _didx = [
-            i for i, c in enumerate(_cols) if c not in partition_by
-        ]
-        _wrote_fast = write_rows_hive_tmp(
-            [tuple(r[i] for i in _didx) for r in _rows],
-            _St([_fields[i] for i in _didx]),
-            tmp,
-            partition_by,
-            [tuple(r[i] for i in _pidx) for r in _rows]
-            if partition_by else None,
-        )
-    if not _wrote_fast:
+    # replicated value-for-value and ``out_df``'s schema.  Equivalence
+    # pinned in tests/test_r13_opt.py; non-provable cases fall back to
+    # the Spark job below.
+    local = driver_rows(df, partition_by)
+    if local is not None and meta_fields:
+        if "_hoodie_commit_time" in df.columns:
+            h = df.columns.index("_hoodie_commit_time")
+            local = [
+                r[:h] + (str(ts) if r[h] is None else r[h],) + r[h + 1:]
+                for r in local
+            ]
+        else:
+            local = [(str(ts),) + r for r in local]
+    if local is None or not write_rows_hive_tmp(
+        local, out_df.schema, tmp, partition_by
+    ):
         writer = out_df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -852,16 +825,17 @@ def write_hudi_log_commit(
         from .avro import spark_schema_to_avro
 
         avro_schema = spark_schema_to_avro(updates.schema, "hudi_rec")
-        # tagged one-slice local frames skip the collect() job — the
-        # driver already holds the rows (guide §5)
-        _local = tagged_rows(updates)
-        _names = list(updates.columns)
-        _recs = (
-            [dict(zip(_names, r)) for r in _local]
-            if _local is not None
+        # gated one-slice local frames skip the collect() job — the
+        # driver already holds the rows (guide §5); any other frame,
+        # including one with a type outside the gate (a struct column
+        # needs asDict's nested dicts), collects
+        local = driver_rows(updates, part_cols)
+        recs = (
+            [dict(zip(updates.columns, r)) for r in local]
+            if local is not None
             else [r.asDict(recursive=True) for r in updates.collect()]
         )
-        for rec in _recs:
+        for rec in recs:
             part = "/".join(
                 f"{c}={rec[c]}" for c in part_cols
             ) if part_cols else ""

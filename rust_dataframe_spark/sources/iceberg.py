@@ -56,6 +56,7 @@ import urllib.parse
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from .avro import decode_records, encode_records
 from .lakehouse_util import (
@@ -64,7 +65,7 @@ from .lakehouse_util import (
     local_rows_df,
     parse_conjuncts as _parse_conjuncts,
     range_survives as _range_survives,
-    tagged_rows,
+    driver_rows,
     write_rows_hive_tmp,
 )
 
@@ -1888,46 +1889,6 @@ def _transform_column(src: str, t: str, tr: str):
     raise IcebergError(f"transform {tr!r} unsupported in writer")
 
 
-def _write_orc_local(
-    rows: list[tuple], schema, tmp: str, field_ids: dict[str, int],
-) -> bool:
-    """Driver-side twin of ``write_orc_dir`` for a ONE-SLICE local
-    frame: one ``part-00000.orc`` via the same pyarrow.orc writer,
-    zlib, ``iceberg.id`` field metadata.  Returns False (caller runs
-    the distributed writer) on any conversion the fast path cannot
-    prove equivalent."""
-    if not rows:
-        # the distributed writer emits NO file for an empty partition
-        return False
-    try:
-        import pyarrow as pa
-        from pyarrow import orc as pa_orc
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        arrow_schema = to_arrow_schema(schema)
-        fields = []
-        for f in arrow_schema:
-            if f.name not in field_ids:
-                return False
-            fields.append(f.with_metadata(
-                {b"iceberg.id": str(field_ids[f.name]).encode()}
-            ))
-        arrow_schema = pa.schema(fields)
-        cols = [
-            pa.array([r[i] for r in rows], type=arrow_schema.types[i])
-            for i in range(len(fields))
-        ]
-        tbl = pa.Table.from_arrays(cols, schema=arrow_schema)
-        os.makedirs(tmp, exist_ok=True)
-        pa_orc.write_table(
-            tbl, os.path.join(tmp, "part-00000.orc"),
-            compression="ZLIB",
-        )
-        return True
-    except Exception:
-        return False
-
-
 def _iceberg_local_transform_vals(
     rows: list[tuple], cols: list[str],
     parts_meta: list[tuple],
@@ -2213,47 +2174,24 @@ def write_iceberg_commit(
                     names=["n_rows"],
                 )
 
-        # tagged one-slice local frames encode driver-side — the SAME
-        # encode_records codec, one part-00000.avro, no Spark job
-        # (guide §5); otherwise the write job's own per-task row
-        # counts replace the old separate df.count() job
-        _local = tagged_rows(df)
-        if _local:  # empty -> distributed path (which writes no file)
-            _recs = [dict(zip(cols_order, r)) for r in _local]
-            with open(
-                os.path.join(tmp, "part-00000.avro"), "wb"
-            ) as fh:
-                fh.write(_enc(sch_json, _recs, codec="deflate"))
-            avro_total = len(_recs)
-        else:
-            avro_total = sum(
-                r["n_rows"]
-                for r in df.mapInArrow(
-                    _write_avro, schema="n_rows long"
-                ).collect()
-            )
+        # the write job's own per-task row counts replace the old
+        # separate df.count() job
+        avro_total = sum(
+            r["n_rows"]
+            for r in df.mapInArrow(
+                _write_avro, schema="n_rows long"
+            ).collect()
+        )
     elif file_format == "orc":
         # field-id-stamped ORC files via pyarrow.orc, one per Spark
         # partition (executor-side encode; iceberg.id type attributes
-        # are the spec's ORC field-id carrier).  Tagged one-slice
-        # local frames write their single part file driver-side —
-        # same pyarrow.orc writer, same naming, no Spark job.
-        _local = tagged_rows(df)
-        _wrote_orc = False
-        if _local is not None:
-            _wrote_orc = _write_orc_local(
-                _local, df.schema, tmp,
-                {c: int(name_to_id[c]) for c in df.columns},
-            )
-        if not _wrote_orc:
-            from .orc import write_orc_dir as _worc
+        # are the spec's ORC field-id carrier)
+        from .orc import write_orc_dir as _worc
 
-            _worc(
-                df, tmp, compression="zlib",
-                field_ids={
-                    c: int(name_to_id[c]) for c in df.columns
-                },
-            )
+        _worc(
+            df, tmp, compression="zlib",
+            field_ids={c: int(name_to_id[c]) for c in df.columns},
+        )
     else:
         # Driver-side fast path for one-slice local fixture frames
         # (guide §5; same discipline as the Delta writer and the
@@ -2263,46 +2201,29 @@ def write_iceberg_commit(
         # (iceberg_bucket / iceberg_truncate, murmur3 test vectors in
         # tests/test_r12_lakehouse.py) the pandas-UDF path vectorizes.
         # Equivalence pinned in tests/test_r13_opt.py; any non-provable
-        # case falls back to the Spark job below.
-        _local = tagged_rows(df)
-        _wrote_fast = False
-        if _local is not None:
-            _cols = list(df.columns)
-            if trans:
-                _didx = list(range(len(_cols)))
-                _pv = _iceberg_local_transform_vals(
-                    _local, _cols, parts_meta
-                )
-            else:
-                _pidx = [_cols.index(c) for c in partition_by]
-                _didx = [
-                    i for i, c in enumerate(_cols)
-                    if c not in partition_by
-                ]
-                _pv = (
-                    [tuple(r[i] for i in _pidx) for r in _local]
-                    if partition_by else None
-                )
-            if _pv is not False:
-                from pyspark.sql.types import StructType as _St
-
-                _data_schema = _St(
-                    [df.schema.fields[i] for i in _didx]
-                )
-                _fids = (
-                    {c: int(name_to_id[c])
-                     for c in (_cols[i] for i in _didx)}
-                    if stamp_field_ids else None
-                )
-                _wrote_fast = write_rows_hive_tmp(
-                    [tuple(r[i] for i in _didx) for r in _local],
-                    _data_schema,
-                    tmp,
-                    write_cols,
-                    _pv,
-                    field_ids=_fids,
-                )
-        if not _wrote_fast:
+        # case falls back to the Spark job below.  Transform values ride
+        # as extra trailing columns typed as the Spark job types them.
+        local = driver_rows(df, [] if trans else partition_by)
+        if local is not None and trans:
+            pv = _iceberg_local_transform_vals(
+                local, df.columns, parts_meta
+            )
+            local = (
+                None if pv is False
+                else [r + v for r, v in zip(local, pv)]
+            )
+        if local is None or not write_rows_hive_tmp(
+            local,
+            StructType(
+                df.schema.fields + [out_df.schema[c] for c in write_cols]
+            ) if trans else df.schema,
+            tmp,
+            write_cols,
+            field_ids=(
+                {c: int(name_to_id[c]) for c in df.columns}
+                if stamp_field_ids else None
+            ),
+        ):
             writer = out_df.write.mode("overwrite")
             if write_cols:
                 writer = writer.partitionBy(*write_cols)
@@ -2519,15 +2440,12 @@ def write_iceberg_position_deletes(
     # The delete set is a driver-local list — write its parquet
     # driver-side (pyarrow, spec-reserved field ids); no Spark job at
     # all (guide §5).  Falls back to the one-slice distributed write
-    # when pyarrow is unavailable or the set exceeds the one-slice
-    # equivalence bound.
-    from pyspark.sql.types import StructType as _St
-
+    # when the set exceeds the one-slice equivalence bound.
     _del_rows = [(p, int(pos)) for p, pos in deletes]
     if not write_rows_hive_tmp(
         _del_rows,
-        _St.fromDDL("file_path string, pos bigint"),
-        tmp, [], None,
+        StructType.fromDDL("file_path string, pos bigint"),
+        tmp,
         field_ids={"file_path": 2147483546, "pos": 2147483545},
     ):
         # one-slice local frame (lakehouse_util.local_rows_df): the old
@@ -2656,22 +2574,16 @@ def write_iceberg_equality_deletes(
     # Driver-side fast path when ``values`` is a tagged one-slice local
     # frame: project the equality columns from the local rows and write
     # via pyarrow — no Spark job (guide §5).
-    _local = tagged_rows(values)
-    _wrote_fast = False
-    if _local is not None:
-        from pyspark.sql.types import StructType as _St
-
-        _vcols = list(values.columns)
-        _eidx = [_vcols.index(c) for c in equality_cols]
-        _wrote_fast = write_rows_hive_tmp(
-            [tuple(r[i] for i in _eidx) for r in _local],
-            _St([values.schema.fields[i] for i in _eidx]),
-            tmp, [], None,
-            field_ids={
-                c: int(name_to_id[c]) for c in equality_cols
-            },
-        )
-    if not _wrote_fast:
+    local = driver_rows(values)
+    if local is not None:
+        eidx = [values.columns.index(c) for c in equality_cols]
+        local = [tuple(r[i] for i in eidx) for r in local]
+    if local is None or not write_rows_hive_tmp(
+        local,
+        StructType([values.schema[c] for c in equality_cols]),
+        tmp,
+        field_ids={c: int(name_to_id[c]) for c in equality_cols},
+    ):
         spark.conf.set(
             "spark.sql.parquet.fieldId.write.enabled", "true"
         )

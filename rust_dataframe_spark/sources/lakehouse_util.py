@@ -15,6 +15,25 @@ BASENAME: every lakehouse writer (Delta/Iceberg/Hudi, Spark's own
 committers) embeds a UUID in the file name, so basenames are unique
 per table and URI-safe ASCII.  Uniqueness is verified loudly before
 the join — a duplicate basename falls back to nothing silently wrong.
+
+Driver-side writes.  This module is the only place that decides
+whether a lakehouse write may skip its Spark job:
+
+* :func:`driver_rows` is the gate for a DataFrame.  It returns the rows
+  of a tagged one-slice :func:`local_rows_df` frame only when every
+  data column's type is in ``_FAST_DATA_TYPES``, every partition
+  column's type is in ``_FAST_PART_TYPES`` and there are at most 4096
+  rows; otherwise None, and the caller runs its Spark job.  Callers:
+  the Delta, Iceberg (parquet) and Hudi commits, the Iceberg
+  equality-delete writer and the Hudi log writer.
+* :func:`write_rows_hive_tmp` writes gated rows in the hive layout the
+  Spark job would produce.  It re-applies the same predicate, so the
+  Iceberg position-delete writer can hand it a plain row list.
+* ``DRIVER_BYTES`` (8 MiB) is the one byte budget for the size-gated
+  driver halves in sources/delta.py: checkpoint replay, the CDF
+  rewrite and OPTIMIZE compaction.
+* :func:`arrow_table` is the one rows→Arrow conversion those writers
+  share.
 """
 
 from __future__ import annotations
@@ -139,86 +158,125 @@ def local_rows_df(spark, rows: list, schema: str):
 def tagged_rows(df: DataFrame) -> list[tuple] | None:
     """Driver-local rows of a one-slice :func:`local_rows_df` frame,
     or None for any other DataFrame (including anything derived from
-    a tagged frame by a transformation)."""
+    a tagged frame by a transformation).  Writers go through
+    :func:`driver_rows`, which adds the type and size checks."""
     return getattr(df, "_sg_rows", None)
 
 
-# Types for which the pyarrow fast path is pinned byte-equivalent to
-# Spark's parquet writer (tests/test_r13_opt.py: same read-back schema,
-# same footer row counts and min/max stats, same file census).  Anything
-# else falls back to the Spark write job.
+# Byte budget for the size-gated driver halves in sources/delta.py
+# (checkpoint replay, CDF rewrite, OPTIMIZE compaction): at or under
+# it the work runs in pyarrow on the driver, above it the distributed
+# path runs unchanged.  8 MiB never opens at scale.
+DRIVER_BYTES = 8 << 20
+# One tagged frame is at most one slice of local_rows_df.  More rows
+# would be a multi-slice frame, where the Spark job writes one file
+# PER SLICE per value: a different file census.
+_MAX_DRIVER_ROWS = 4096
+# Data-column types for which the pyarrow write is pinned equal to
+# Spark's parquet writer (tests/test_r13_opt.py: same read-back schema
+# and values, same footer row counts and min/max stats, same census).
 _FAST_DATA_TYPES = {
     "integer", "long", "string", "double", "float", "boolean", "date",
     "short", "byte",
 }
-# Partition-dir values additionally must render to the same directory
-# string Spark produces; pinned for int-family, string and date.
+# Partition columns must also render to the directory string Spark
+# writes.  Python's str() agrees with Spark for these types only: a
+# boolean renders ``True`` where Spark writes ``true``, a double
+# ``0.0002`` where Spark writes ``2.0E-4``.
 _FAST_PART_TYPES = {"integer", "long", "string", "date", "short", "byte"}
 # Characters Spark/Hive never escape in a partition dir name.  Anything
 # outside (including '%', so unquote() round-trips) falls back.
 _SAFE_PART_RE = re.compile(r"^[A-Za-z0-9._+-]+$")
 
 
+def driver_types_ok(schema, partition_by=()) -> bool:
+    """True when every column of ``schema`` has a type the driver-side
+    writers are pinned for: partition columns (by name) against
+    ``_FAST_PART_TYPES``, all others against ``_FAST_DATA_TYPES``."""
+    return all(
+        f.dataType.typeName() in (
+            _FAST_PART_TYPES if f.name in partition_by
+            else _FAST_DATA_TYPES
+        )
+        for f in schema.fields
+    )
+
+
+def driver_rows(df: DataFrame, partition_by=()) -> list[tuple] | None:
+    """THE gate for driver-side writes of a DataFrame: the rows of a
+    tagged one-slice frame when every column type passes
+    :func:`driver_types_ok` and there are at most 4096 rows; None
+    otherwise, and the caller runs its Spark job."""
+    rows = tagged_rows(df)
+    if (
+        rows is None or len(rows) > _MAX_DRIVER_ROWS
+        or not driver_types_ok(df.schema, partition_by)
+    ):
+        return None
+    return rows
+
+
+def arrow_table(rows: list[tuple], schema):
+    """pyarrow Table of driver-local row tuples under an arrow
+    ``schema`` (one ``pa.array`` per column, typed by the schema)."""
+    import pyarrow as pa
+
+    return pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in rows], type=t)
+            for i, t in enumerate(schema.types)
+        ],
+        schema=schema,
+    )
+
+
 def write_rows_hive_tmp(
     rows: list[tuple],
-    data_schema,
+    schema,
     tmp: str,
-    part_names: list[str],
-    part_vals: list[tuple] | None,
+    partition_by=(),
     *,
     field_ids: dict[str, int] | None = None,
 ) -> bool:
     """Driver-side twin of ``df.write.mode('overwrite')
-    .partitionBy(*cols).parquet(tmp)`` for ONE-SLICE local-rows frames
-    (guide §5: the driver should do almost no data work — and a
+    .partitionBy(*partition_by).parquet(tmp)`` for ONE-SLICE local-rows
+    frames (guide §5: the driver should do almost no data work — and a
     distributed write job over a driver-local fixture list is exactly
     that work, ~0.25-0.4 s of scheduling per tiny commit).
 
-    Produces the SAME tmp layout the Spark job would: hive partition
-    dirs ``k=v``, ONE part file per partition value (a one-slice frame
-    is a one-task write), parquet schema derived through the same
-    ``to_arrow_schema`` mapping the checkpoint fast path pinned, footer
-    min/max statistics on, optional ``PARQUET:field_id`` stamping.
+    ``rows`` are full row tuples aligned with the Spark ``schema``,
+    partition columns included, in input order.  Produces the SAME
+    tmp layout the Spark job would: hive partition dirs ``k=v`` in
+    ``partition_by`` order, ONE part file per partition value (a
+    one-slice frame is a one-task write), data columns in schema order
+    minus the partition columns, footer min/max statistics on, optional
+    ``PARQUET:field_id`` stamping keyed by data-column name.
     Returns False — caller runs the original Spark job — whenever
-    equivalence is not provable: pyarrow missing, empty input, a type
-    outside the pinned whitelist, or a partition value that is null or
-    would be hive-escaped (chars outside ``_SAFE_PART_RE``).
+    equivalence is not provable: empty input, rows or types failing
+    the :func:`driver_rows` predicate, no data column left after the
+    partition columns, a partition value that is null or would be
+    hive-escaped (chars outside ``_SAFE_PART_RE``), or a data column
+    without a field id."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
-    ``rows`` are the FILE contents (partition columns already removed,
-    matching partitionBy semantics) in input order; ``part_vals`` the
-    per-row partition tuples aligned with ``rows`` (None ≡ all-empty,
-    unpartitioned)."""
-    if not rows or len(rows) > 4096:
-        # >4096 rows would have been a multi-slice frame: the Spark
-        # job writes one file PER SLICE per value — a different file
-        # census the fast path must not silently change
+    if (
+        not rows or len(rows) > _MAX_DRIVER_ROWS
+        or not driver_types_ok(schema, partition_by)
+    ):
         return False
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-    except Exception:
-        return False
-    for f in data_schema.fields:
-        if f.dataType.typeName() not in _FAST_DATA_TYPES:
-            return False
-    if part_names:
-        if part_vals is None or len(part_vals) != len(rows):
-            return False
-        for pv in part_vals:
-            for v in pv:
-                if v is None:
-                    return False  # Spark path fail-louds identically
-                s = str(v)
-                if not _SAFE_PART_RE.match(s):
-                    return False
-    try:
-        arrow_schema = to_arrow_schema(data_schema)
-    except Exception:
-        return False
+    names = [f.name for f in schema.fields]
+    pidx = [names.index(c) for c in partition_by]
+    didx = [i for i, c in enumerate(names) if c not in partition_by]
+    if not didx:
+        return False  # Spark refuses to partition by every column
+    arrow_schema = to_arrow_schema(
+        StructType([schema.fields[i] for i in didx])
+    )
     if field_ids is not None:
-        missing = [n for n in arrow_schema.names if n not in field_ids]
-        if missing:
+        if any(n not in field_ids for n in arrow_schema.names):
             return False
         arrow_schema = pa.schema([
             f.with_metadata(
@@ -230,26 +288,20 @@ def write_rows_hive_tmp(
     # exactly the one-task Spark write's order (positions in the file
     # matter to position-delete fixtures)
     groups: dict[tuple, list[tuple]] = {}
-    if part_names:
-        for r, pv in zip(rows, part_vals):
-            groups.setdefault(tuple(pv), []).append(tuple(r))
-    else:
-        groups[()] = [tuple(r) for r in rows]
-    ncols = len(data_schema.fields)
+    for r in rows:
+        pv = tuple(r[i] for i in pidx)
+        if any(v is None or not _SAFE_PART_RE.match(str(v)) for v in pv):
+            return False  # null: Spark path fail-louds identically
+        groups.setdefault(pv, []).append(tuple(r[i] for i in didx))
     try:
         for pv, grp in groups.items():
             sub = "/".join(
-                f"{c}={v}" for c, v in zip(part_names, pv)
+                f"{c}={v}" for c, v in zip(partition_by, pv)
             )
             out_dir = os.path.join(tmp, sub) if sub else tmp
             os.makedirs(out_dir, exist_ok=True)
-            cols = [
-                pa.array([r[i] for r in grp], type=arrow_schema.types[i])
-                for i in range(ncols)
-            ]
-            tbl = pa.Table.from_arrays(cols, schema=arrow_schema)
             pq.write_table(
-                tbl,
+                arrow_table(grp, arrow_schema),
                 os.path.join(
                     out_dir, f"part-00000-{uuid.uuid4().hex[:12]}.parquet"
                 ),

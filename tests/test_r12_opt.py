@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from rust_dataframe_spark.sources import delta as d
 from rust_dataframe_spark.sources import iceberg as ice
+from rust_dataframe_spark.sources import lakehouse_util
 from rust_dataframe_spark.sources.lakehouse_util import local_rows_df
 
 
@@ -119,7 +120,7 @@ def test_cp_driver_replay_matches_distributed(
     path = str(tmp_path / "cp_tbl")
     _mk_checkpointed_table(spark, path)
     meta_fast, adds_fast = d.delta_snapshot_files(spark, path)
-    monkeypatch.setattr(d, "_CP_DRIVER_BYTES", 0)  # force fallback
+    monkeypatch.setattr(lakehouse_util, "DRIVER_BYTES", 0)  # force fallback
     meta_slow, adds_slow = d.delta_snapshot_files(spark, path)
 
     def canon_adds(adds):
@@ -153,7 +154,7 @@ def test_cp_driver_replay_styles(spark, tmp_path, monkeypatch):
         d.write_delta_checkpoint(spark, path, style=style)
         os.remove(os.path.join(path, d._LOG, d._commit_name(0)))
         fast = d.delta_snapshot_files(spark, path)
-        monkeypatch.setattr(d, "_CP_DRIVER_BYTES", 0)
+        monkeypatch.setattr(lakehouse_util, "DRIVER_BYTES", 0)
         slow = d.delta_snapshot_files(spark, path)
         monkeypatch.undo()
         assert sorted(a["path"] for a in fast[1]) == sorted(

@@ -9,30 +9,40 @@ Covers (OPTIMIZATION_r13.md):
   through ``spark.read.parquet``, footer min/max statistics present,
   ``PARQUET:field_id`` stamping identical to Spark's
   ``parquet.field.id`` metadata path;
-- fallback triggers: >4096 rows, unsupported types, null / escaped
-  partition values, empty input;
+- fallback triggers: >4096 rows, unsupported types (boolean and
+  double partition columns among them), null / escaped partition
+  values, empty input;
+- the one gate (``lakehouse_util.driver_rows``): its whitelists, and a
+  source scan keeping the gate's names out of every other module;
 - the Iceberg transform fast path (``_iceberg_local_transform_vals``)
   vs the distributed ``_transform_column`` kernels;
 - the Hudi meta-field prepend/coalesce replication;
 - end-to-end: a Delta/Iceberg/Hudi table written through the fast
   path reads back identically to one written with the fast path
-  disabled (tag stripped).
+  disabled (tag stripped), and a Hypothesis property over random
+  schemas of atomic types does the same for the Delta commit;
+- compaction's duplicate-basename refusal and the Hudi log writer's
+  struct-column fallback.
 """
 
 from __future__ import annotations
 
+import datetime
 import os
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from rust_dataframe_spark.sources import delta as d
 from rust_dataframe_spark.sources import hudi as h
 from rust_dataframe_spark.sources import iceberg as ice
+from rust_dataframe_spark.sources import lakehouse_util
 from rust_dataframe_spark.sources.lakehouse_util import (
+    driver_rows,
     local_rows_df,
-    tagged_rows,
     write_rows_hive_tmp,
 )
 
@@ -82,11 +92,7 @@ def test_hive_tmp_matches_spark_partitioned(spark, tmp_path):
     ddl = "id int, name string, x double, p int"
     fast = str(tmp_path / "fast")
     slow = str(tmp_path / "slow")
-    schema = StructType.fromDDL("id int, name string, x double")
-    assert write_rows_hive_tmp(
-        [r[:3] for r in rows], schema, fast, ["p"],
-        [(r[3],) for r in rows],
-    )
+    assert write_rows_hive_tmp(rows, StructType.fromDDL(ddl), fast, ["p"])
     local_rows_df(spark, rows, ddl).write.mode("overwrite").partitionBy(
         "p"
     ).parquet(slow)
@@ -116,7 +122,7 @@ def test_hive_tmp_field_ids_match_spark(spark, tmp_path):
     fast = str(tmp_path / "fast")
     slow = str(tmp_path / "slow")
     assert write_rows_hive_tmp(
-        rows, schema, fast, [], None, field_ids={"a": 7, "b": 9}
+        rows, schema, fast, field_ids={"a": 7, "b": 9}
     )
     spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
     from rust_dataframe_spark.sources.fieldid import with_field_ids
@@ -140,31 +146,46 @@ def test_hive_tmp_field_ids_match_spark(spark, tmp_path):
 
 def test_hive_tmp_fallbacks(tmp_path):
     schema = StructType.fromDDL("a int")
+    part = StructType.fromDDL("a int, p string")
     # empty input
-    assert not write_rows_hive_tmp([], schema, str(tmp_path / "t1"),
-                                   [], None)
+    assert not write_rows_hive_tmp([], schema, str(tmp_path / "t1"))
     # >4096 rows (would be a multi-slice frame -> different census)
     assert not write_rows_hive_tmp(
         [(i,) for i in range(4097)], schema, str(tmp_path / "t2"),
-        [], None,
     )
     # unsupported data type
     ts = StructType.fromDDL("a timestamp")
-    assert not write_rows_hive_tmp([(None,)], ts, str(tmp_path / "t3"),
-                                   [], None)
+    assert not write_rows_hive_tmp([(None,)], ts, str(tmp_path / "t3"))
     # null partition value (Spark path fail-louds; fast path declines)
     assert not write_rows_hive_tmp(
-        [(1,)], schema, str(tmp_path / "t4"), ["p"], [(None,)],
+        [(1, None)], part, str(tmp_path / "t4"), ["p"],
     )
     # partition value Spark would hive-escape
     assert not write_rows_hive_tmp(
-        [(1,)], schema, str(tmp_path / "t5"), ["p"], [("a b:c",)],
+        [(1, "a b:c")], part, str(tmp_path / "t5"), ["p"],
     )
     # missing field id
     assert not write_rows_hive_tmp(
-        [(1,)], schema, str(tmp_path / "t6"), [], None,
-        field_ids={},
+        [(1,)], schema, str(tmp_path / "t6"), field_ids={},
     )
+    # partition types whose str() differs from Spark's dir name:
+    # boolean renders True (Spark: true), double 0.0002 (Spark: 2.0E-4)
+    assert not write_rows_hive_tmp(
+        [(1, True)], StructType.fromDDL("a int, flag boolean"),
+        str(tmp_path / "t7"), ["flag"],
+    )
+    assert not write_rows_hive_tmp(
+        [(1, 0.0002)], StructType.fromDDL("a int, x double"),
+        str(tmp_path / "t8"), ["x"],
+    )
+    # the same types are fine as DATA columns
+    assert write_rows_hive_tmp(
+        [(1, True, 0.0002)],
+        StructType.fromDDL("a int, flag boolean, x double"),
+        str(tmp_path / "t9"), ["a"],
+    )
+    # nothing was written for any declined case
+    assert sorted(os.listdir(tmp_path)) == ["t9"]
 
 
 def test_hive_tmp_row_order_preserved(spark, tmp_path):
@@ -172,10 +193,8 @@ def test_hive_tmp_row_order_preserved(spark, tmp_path):
     # deletes: input order within each partition group must survive
     rows = [(i, i % 2) for i in range(10)]
     fast = str(tmp_path / "fast")
-    schema = StructType.fromDDL("id int")
     assert write_rows_hive_tmp(
-        [(r[0],) for r in rows], schema, fast, ["p"],
-        [(r[1],) for r in rows],
+        rows, StructType.fromDDL("id int, p int"), fast, ["p"]
     )
     got = [
         r.id for r in spark.read.parquet(os.path.join(fast, "p=0"))
@@ -329,58 +348,14 @@ def test_hudi_commit_fast_vs_slow_meta_fields(spark, tmp_path):
     assert ta.count() == 1
 
 
-def test_iceberg_orc_local_matches_distributed(spark, tmp_path):
-    rows = [(i, i * 3) for i in range(9)]
-    ddl = "id int, v long"
-    pa_t = str(tmp_path / "fasto")
-    sp_t = str(tmp_path / "slowo")
-    ice.write_iceberg_commit(
-        spark, pa_t, local_rows_df(spark, rows, ddl),
-        file_format="orc",
-    )
-    ice.write_iceberg_commit(
-        spark, sp_t, _untag(local_rows_df(spark, rows, ddl)),
-        file_format="orc",
-    )
-    a = ice.read_iceberg(spark, pa_t)
-    b = ice.read_iceberg(spark, sp_t)
-    assert a.schema == b.schema
-    assert _canon(a.collect()) == _canon(b.collect())
-
-
-def test_iceberg_avro_local_matches_distributed(spark, tmp_path):
-    rows = [(i, i * 3) for i in range(9)]
-    ddl = "id int, v long"
-    pa_t = str(tmp_path / "fasta")
-    sp_t = str(tmp_path / "slowa")
-    ice.write_iceberg_commit(
-        spark, pa_t, local_rows_df(spark, rows, ddl),
-        file_format="avro",
-    )
-    ice.write_iceberg_commit(
-        spark, sp_t, _untag(local_rows_df(spark, rows, ddl)),
-        file_format="avro",
-    )
-    a = ice.read_iceberg(spark, pa_t)
-    b = ice.read_iceberg(spark, sp_t)
-    assert a.schema == b.schema
-    assert _canon(a.collect()) == _canon(b.collect())
-
-
-def _gate_off(monkeypatch):
-    """Force the size gates shut so the distributed paths run."""
-    monkeypatch.setattr(d, "_CP_DRIVER_BYTES", -1)
-
-
 def test_cdf_rewrite_local_vs_distributed(spark, tmp_path, monkeypatch):
     rows = [(i, i * 10) for i in range(12)]
     ddl = "id int, v long"
 
     def build(path, fast):
-        if not fast:
-            monkeypatch.setattr(d, "_CP_DRIVER_BYTES", -1)
-        else:
-            monkeypatch.setattr(d, "_CP_DRIVER_BYTES", 8 << 20)
+        monkeypatch.setattr(
+            lakehouse_util, "DRIVER_BYTES", (8 << 20) if fast else -1
+        )
         d.write_delta_commit(
             spark, path, local_rows_df(spark, rows, ddl),
             enable_cdf=True,
@@ -409,7 +384,7 @@ def test_cdf_rewrite_local_null_condition(spark, tmp_path, monkeypatch):
 
     def build(path, fast):
         monkeypatch.setattr(
-            d, "_CP_DRIVER_BYTES", (8 << 20) if fast else -1
+            lakehouse_util, "DRIVER_BYTES", (8 << 20) if fast else -1
         )
         d.write_delta_commit(
             spark, path, local_rows_df(spark, rows, ddl),
@@ -432,7 +407,7 @@ def test_compact_local_vs_distributed(spark, tmp_path, monkeypatch):
 
     def build(path, fast):
         monkeypatch.setattr(
-            d, "_CP_DRIVER_BYTES", (8 << 20) if fast else -1
+            lakehouse_util, "DRIVER_BYTES", (8 << 20) if fast else -1
         )
         d.write_delta_commit(
             spark, path, local_rows_df(spark, rows_a, ddl),
@@ -459,7 +434,7 @@ def test_compact_local_with_dvs(spark, tmp_path, monkeypatch):
 
     def build(path, fast):
         monkeypatch.setattr(
-            d, "_CP_DRIVER_BYTES", (8 << 20) if fast else -1
+            lakehouse_util, "DRIVER_BYTES", (8 << 20) if fast else -1
         )
         d.write_delta_commit(
             spark, path, local_rows_df(spark, rows, ddl)
@@ -479,12 +454,185 @@ def test_compact_local_with_dvs(spark, tmp_path, monkeypatch):
 
 def test_tag_semantics(spark):
     df = local_rows_df(spark, [(1, 2)], "a int, b int")
-    assert tagged_rows(df) == [(1, 2)]
+    assert driver_rows(df) == [(1, 2)]
     # any transformation drops the tag
-    assert tagged_rows(df.select("a")) is None
-    assert tagged_rows(df.filter("a = 1")) is None
+    assert driver_rows(df.select("a")) is None
+    assert driver_rows(df.filter("a = 1")) is None
     # >4096 rows: multi-slice, never tagged
     big = local_rows_df(
         spark, [(i, i) for i in range(5000)], "a int, b int"
     )
-    assert tagged_rows(big) is None
+    assert driver_rows(big) is None
+    # the gate's type whitelists: data vs partition columns
+    mixed = local_rows_df(spark, [(1, True)], "a int, flag boolean")
+    assert driver_rows(mixed) == [(1, True)]
+    assert driver_rows(mixed, ["a"]) == [(1, True)]
+    assert driver_rows(mixed, ["flag"]) is None
+    stamped = local_rows_df(
+        spark, [(1, datetime.datetime(2024, 1, 1))], "a int, t timestamp"
+    )
+    assert driver_rows(stamped) is None
+
+
+def test_compact_local_duplicate_basename_raises(spark, tmp_path):
+    # two live files in two directories share one basename and one
+    # carries a DV: keyed by basename, its tombstones would also drop
+    # rows of the other file, so compaction must refuse as the
+    # distributed branch does
+    import json
+    import shutil
+
+    path = str(tmp_path / "dup")
+    d.write_delta_commit(
+        spark, path, local_rows_df(spark, [(i,) for i in range(6)], "id int")
+    )
+    _m, adds = d.delta_snapshot_files(spark, path)
+    rel = adds[0]["path"]
+    os.makedirs(os.path.join(path, "copy"))
+    shutil.copy(os.path.join(path, rel), os.path.join(path, "copy", rel))
+    with open(os.path.join(path, d._LOG, d._commit_name(1)), "w") as fh:
+        fh.write(json.dumps({"add": dict(adds[0], path=f"copy/{rel}")}))
+    d.write_delta_delete_rows(spark, path, {rel: [1, 4]})
+    with pytest.raises(d.DeltaError, match="duplicate data-file basename"):
+        d.compact_delta_files(spark, path)
+
+
+def test_hudi_log_struct_column_collects(spark, tmp_path):
+    # a struct column is outside the gate: the log writer collects
+    # (nested dicts) instead of encoding raw tuples, and reads back
+    ddl = "id int, s struct<a:int,b:string>, p int"
+    path = str(tmp_path / "hs")
+    h.write_hudi_commit(
+        spark, path,
+        local_rows_df(
+            spark, [(i, (i, f"b{i}"), i % 2) for i in range(6)], ddl
+        ),
+        partition_by=["p"], table_type="MERGE_ON_READ", record_key="id",
+    )
+    ups = local_rows_df(spark, [(2, (200, "x"), 0), (3, None, 1)], ddl)
+    assert driver_rows(ups, ["p"]) is None
+    h.write_hudi_log_commit(spark, path, ups)
+    got = {
+        r.id: (r.s.asDict() if r.s is not None else None)
+        for r in h.read_hudi(spark, path).collect()
+    }
+    assert got == {
+        0: {"a": 0, "b": "b0"}, 1: {"a": 1, "b": "b1"},
+        2: {"a": 200, "b": "x"}, 3: None,
+        4: {"a": 4, "b": "b4"}, 5: {"a": 5, "b": "b5"},
+    }
+
+
+def test_driver_write_gate_lives_in_one_module():
+    # the driver-side write decision is made in lakehouse_util only
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(lakehouse_util.__file__).resolve().parents[1]
+    owner = pathlib.Path(lakehouse_util.__file__).resolve()
+    patterns = [
+        re.compile(r"\btagged_rows\("),
+        re.compile(r"_FAST_(DATA|PART)_TYPES"),
+        re.compile(r"^\s*\w*DRIVER_BYTES\s*=", re.M),
+    ]
+    offenders = [
+        (str(f.relative_to(pkg)), p.pattern)
+        for f in sorted(pkg.rglob("*.py")) if f.resolve() != owner
+        for p in patterns if p.search(f.read_text(encoding="utf-8"))
+    ]
+    assert offenders == []
+    delta_src = (pkg / "sources" / "delta.py").read_text(encoding="utf-8")
+    assert "os.environ" not in delta_src
+
+
+# ---------------------------------------------------------------------------
+# property: a tagged frame and its untagged twin commit identically
+# ---------------------------------------------------------------------------
+
+_ATOMIC = {
+    "boolean": st.booleans(),
+    "tinyint": st.integers(-(1 << 7), (1 << 7) - 1),
+    "smallint": st.integers(-(1 << 15), (1 << 15) - 1),
+    "int": st.integers(-(1 << 31), (1 << 31) - 1),
+    "bigint": st.integers(-(1 << 63), (1 << 63) - 1),
+    "float": st.floats(width=32),
+    "double": st.floats(),
+    "string": st.one_of(
+        st.text(alphabet="ab1._-", min_size=1, max_size=3),
+        st.text(
+            alphabet=st.characters(blacklist_categories=("Cs",)),
+            max_size=3,
+        ),
+    ),
+    "date": st.dates(
+        min_value=datetime.date(1900, 1, 1),
+        max_value=datetime.date(2100, 12, 31),
+    ),
+    "timestamp": st.datetimes(
+        min_value=datetime.datetime(1970, 1, 2),
+        max_value=datetime.datetime(2100, 1, 1),
+    ),
+    "decimal(10,2)": st.decimals(
+        min_value=-(10 ** 7), max_value=10 ** 7, places=2,
+        allow_nan=False, allow_infinity=False,
+    ),
+}
+
+
+@st.composite
+def _frames(draw):
+    types = draw(st.lists(st.sampled_from(sorted(_ATOMIC)), min_size=1,
+                          max_size=4))
+    names = [f"c{i}" for i in range(len(types))]
+    rows = draw(st.lists(
+        st.tuples(*[
+            # about one value in eight is null
+            st.integers(0, 7).flatmap(
+                lambda k, t=t: st.none() if k == 0 else _ATOMIC[t]
+            )
+            for t in types
+        ]),
+        min_size=1, max_size=6,
+    ))
+    part = draw(st.lists(st.sampled_from(names), unique=True,
+                         max_size=min(2, len(names))))
+    ddl = ", ".join(f"{n} {t}" for n, t in zip(names, types))
+    return ddl, rows, part
+
+
+def _delta_outcome(spark, path, frame, partition_by):
+    import json
+
+    try:
+        d.write_delta_commit(spark, path, frame, partition_by=partition_by)
+    except Exception as e:  # both paths must refuse alike
+        return ("error", type(e).__name__)
+    _m, adds = d.delta_snapshot_files(spark, path)
+    return (
+        sorted(a["path"].rpartition("/")[0] for a in adds),
+        sorted(json.dumps(a["partitionValues"], sort_keys=True)
+               for a in adds),
+        _census(path),
+        _canon(d.read_delta(spark, path).collect()),
+    )
+
+
+@settings(max_examples=25, deadline=None, derandomize=True,
+          suppress_health_check=[HealthCheck.function_scoped_fixture,
+                                 HealthCheck.too_slow])
+@given(frame=_frames())
+@example(frame=("c0 int, c1 boolean", [(1, True), (2, False)], ["c1"]))
+@example(frame=("c0 int, c1 double", [(1, 0.0002), (2, 0.5)], ["c1"]))
+def test_delta_commit_tagged_equals_untagged(spark, tmp_path, frame):
+    import uuid
+
+    ddl, rows, part = frame
+    root = tmp_path / uuid.uuid4().hex[:8]
+    fast = _delta_outcome(
+        spark, str(root / "t"), local_rows_df(spark, rows, ddl), part
+    )
+    slow = _delta_outcome(
+        spark, str(root / "u"), _untag(local_rows_df(spark, rows, ddl)),
+        part,
+    )
+    assert fast == slow

@@ -580,13 +580,14 @@ class TestAvro:
 
         df = spark.createDataFrame(
             [
-                (1, "alpha", 1.25, True, bytearray(b"zz")),
-                (2, None, None, False, None),
-                (3, "gamma", float("nan"), True, bytearray(b"\x01")),
-                (4, "delta", float("inf"), False, None),
-                (5, "eps", float("-inf"), True, bytearray(b"")),
+                (1, "alpha", 1.25, True, bytearray(b"zz"), (1, "p")),
+                (2, None, None, False, None, None),
+                (3, "gamma", float("nan"), True, bytearray(b"\x01"), (3, None)),
+                (4, "delta", float("inf"), False, None, (4, "q")),
+                (5, "eps", float("-inf"), True, bytearray(b""), (5, "r")),
             ],
-            "id long, name string, score double, flag boolean, blob binary",
+            "id long, name string, score double, flag boolean, blob binary, "
+            "pt struct<x:int,y:string>",
         )
         p = str(tmp_path / "avro_rt")
         n_files = av.write_avro_dir(df.repartition(3), p)
@@ -598,6 +599,9 @@ class TestAvro:
         assert back[4]["score"] == float("inf")
         assert back[5]["score"] == float("-inf") and bytes(back[5]["blob"]) == b""
         assert bytes(back[1]["blob"]) == b"zz" and back[1]["score"] == 1.25
+        # struct columns travel as nested records
+        assert back[2]["pt"] is None and back[3]["pt"].asDict() == {"x": 3, "y": None}
+        assert back[1]["pt"].asDict() == {"x": 1, "y": "p"}
 
 
 def _h2_jar_present() -> bool:
