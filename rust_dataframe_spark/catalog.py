@@ -119,13 +119,18 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
            l_quantity
     FROM lineitem
     WHERE l_quantity > 45.0 AND l_discount >= 0.05
-    ORDER BY l_orderkey, l_linenumber
+    ORDER BY l_orderkey, l_linenumber, revenue, l_quantity
     LIMIT 100
     """,
 )
 def q02_select_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """select + with_column (arith calc) + filter + total-order sort + limit —
     the eager-API chain of reference dataframe.rs:782-836.
+
+    The sort key is every output column: ``(l_orderkey, l_linenumber)``
+    repeats in lineitem, so ordering by it alone lets each engine pick a
+    different tied row at the LIMIT boundary.  Rows tied on all four
+    columns are identical, so the selected rows are the same everywhere.
 
     Scale: projection+predicate both push into the scan; TakeOrderedAndProject
     keeps only 100 rows per partition (no global sort materialization).
@@ -139,7 +144,7 @@ def q02_select_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("revenue"),
             "l_quantity",
         )
-        .orderBy("l_orderkey", "l_linenumber")
+        .orderBy("l_orderkey", "l_linenumber", "revenue", "l_quantity")
         .limit(100)
     )
 

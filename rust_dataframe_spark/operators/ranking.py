@@ -28,7 +28,11 @@ Scale shape (100 TB corpus):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, Window, functions as F
+
+from ..sources.lakehouse_util import local_rows_df
 
 __all__ = [
     "tfidf_top_terms",
@@ -383,15 +387,18 @@ def bradley_terry(
     that appears only in NULL-partner rows bypass the zero-wins check).
     Scale: the comparison stream reduces FIRST to the (i, j, n, w)
     distinct-pair table and the item axis (both Heaps-bounded: items are
-    models/policies being ranked, not the corpus); each round is one join
-    of the pair table against the item axis + grouped ordered folds.  The
+    models/policies being ranked, not the corpus).  Each round is ONE
+    action with one shuffle: the pair table joins the broadcast item axis,
+    and one item-keyed grouping computes both the per-item denominator
+    folds and the likelihood ledger (carried under the NULL item).  The
     per-round ``collect()`` is item-axis-sized — the kmeans-centroid
     discipline — and FAIL-LOUD BUDGETED (VERDICT r7 #5, the dbscan
-    ``max_candidate_pairs`` discipline): the item axis is counted before
-    round 1 and anything above ``SPARK_GRAFT_BT_MAX_ITEMS`` (default 1e6)
-    raises instead of OOMing the driver silently-late — a user pointing
-    ``winner_col`` at document ids gets a contract violation, not a hang.
-    Plan depth is O(1) in ``iters`` (per-round lineage truncation).
+    ``max_candidate_pairs`` discipline): before round 1 the item axis is
+    collected with a limit of ``SPARK_GRAFT_BT_MAX_ITEMS`` (default 1e6)
+    plus one, and one row over the budget raises instead of OOMing the
+    driver silently-late — a user pointing ``winner_col`` at document ids
+    gets a contract violation, not a hang.  Plan depth is O(1) in
+    ``iters`` (per-round lineage truncation).
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
@@ -434,21 +441,16 @@ def bradley_terry(
         .groupBy("item")
         .agg(F.sum("wn").cast("bigint").alias("W"))
     )
-    import os
-
-    axis_budget = int(
-        os.environ.get(BT_MAX_ITEMS_ENV, BT_DEFAULT_MAX_ITEMS)
-    )
-    n_items = wins_df.count()
-    if n_items > axis_budget:
+    axis_budget = int(os.environ.get(BT_MAX_ITEMS_ENV, BT_DEFAULT_MAX_ITEMS))
+    wins_rows = wins_df.limit(axis_budget + 1).collect()
+    if len(wins_rows) > axis_budget:
         raise ValueError(
-            f"bradley_terry: item axis has {n_items} distinct items, over "
-            f"the {axis_budget} driver-collect budget "
-            f"({BT_MAX_ITEMS_ENV}) — the per-round collect is sized by the "
+            f"bradley_terry: item axis has over {axis_budget} distinct "
+            f"items, the driver-collect budget ({BT_MAX_ITEMS_ENV}) — the "
+            f"per-round collect is sized by the "
             f"entities being RANKED (models/policies), not the corpus; "
             f"a corpus-sized axis would OOM the driver"
         )
-    wins_rows = wins_df.collect()
     items = sorted(r["item"] for r in wins_rows)
     wins = {r["item"]: r["W"] for r in wins_rows}
     zero = [it for it in items if wins[it] == 0]
@@ -457,74 +459,67 @@ def bradley_terry(
             f"bradley_terry: items with zero wins degenerate the model: "
             f"{zero[:10]} — drop them or add pseudo-comparisons"
         )
-    add = lambda a, b: a + b  # noqa: E731
+
+    def fold(col, field):
+        """Left-to-right sum of ``field`` over the group's non-NULL
+        ``col`` structs, in sorted struct order."""
+        return F.aggregate(
+            F.transform(F.array_sort(F.collect_list(col)), lambda s: s[field]),
+            F.lit(0.0),
+            lambda x, y: x + y,
+        )
+
+    qsum = (F.col("qi") + F.col("qj")).cast("double")
+    t = F.col("n").cast("double") * F.lit(float(S)) / qsum
+    v = F.col("w") * F.log(F.col("qi").cast("double") / qsum) + (
+        F.col("n") - F.col("w")
+    ) * F.log(F.col("qj").cast("double") / qsum)
+    no_d = F.lit(None).cast(f"struct<opp:{item_type},t:double>")
+    no_l = F.lit(None).cast("struct<k:string,v:double>")
+
+    def rec(item, d, l):
+        return F.struct(item.alias("item"), d.alias("d"), l.alias("l"))
+
+    # Per pair: a denominator term ``d`` for each side, keyed by that
+    # side, plus one likelihood-ledger term ``l`` under the NULL item
+    # (NULL items were rejected above, so that key cannot clash).
+    recs = F.explode(F.array(
+        rec(F.col("i"), F.struct(F.col("j").alias("opp"), t.alias("t")), no_l),
+        rec(F.col("j"), F.struct(F.col("i").alias("opp"), t.alias("t")), no_l),
+        rec(
+            F.lit(None).cast(item_type), no_d,
+            F.struct(F.concat_ws("#", "i", "j").alias("k"), v.alias("v")),
+        ),
+    ))
 
     cur = {it: S for it in items}  # uniform start on the grid
     out_rows = []
     for rnd in range(1, iters + 1):
         # one-slice local frame: plain createDataFrame parallelizes the
         # item axis into defaultParallelism mostly-empty pickled slices,
-        # each a Python-worker round-trip per evaluating job (guide §4)
-        from ..sources.lakehouse_util import local_rows_df
-
-        pi = local_rows_df(
+        # each a Python-worker round-trip per evaluating job (guide §4);
+        # rebuilding it from driver rows each round truncates the lineage
+        pi = F.broadcast(local_rows_df(
             spark,
             [(it, int(q)) for it, q in sorted(cur.items())],
             f"item {item_type}, q bigint",
-        )
+        ))
         both = (
             pair_tab.join(pi.select(F.col("item").alias("i"), F.col("q").alias("qi")), "i")
             .join(pi.select(F.col("item").alias("j"), F.col("q").alias("qj")), "j")
         )
-        # monotonicity ledger on the ENTERING grid strengths
-        ll_in = (
-            both.select(
-                F.concat_ws("#", F.col("i"), F.col("j")).alias("k"),
-                (
-                    F.col("w")
-                    * F.log(F.col("qi").cast("double") / (F.col("qi") + F.col("qj")).cast("double"))
-                    + (F.col("n") - F.col("w"))
-                    * F.log(F.col("qj").cast("double") / (F.col("qi") + F.col("qj")).cast("double"))
-                ).alias("v"),
-            )
-            .agg(
-                F.aggregate(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("k", "v"))),
-                        lambda s: s["v"],
-                    ),
-                    F.lit(0.0),
-                    add,
-                ).alias("ll")
-            )
-            .collect()[0]["ll"]
-        )
-        # per-item denominator: grouped ordered fold over opponent id
-        sym = both.select(
-            F.col("i").alias("item"), F.col("j").alias("opp"),
-            (F.col("n").cast("double") * F.lit(float(S)) / (F.col("qi") + F.col("qj")).cast("double")).alias("t"),
-        ).unionByName(
-            both.select(
-                F.col("j").alias("item"), F.col("i").alias("opp"),
-                (F.col("n").cast("double") * F.lit(float(S)) / (F.col("qi") + F.col("qj")).cast("double")).alias("t"),
-            )
-        )
-        dens = {
-            r["item"]: r["D"]
-            for r in sym.groupBy("item")
-            .agg(
-                F.aggregate(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("opp", "t"))),
-                        lambda s: s["t"],
-                    ),
-                    F.lit(0.0),
-                    add,
-                ).alias("D")
-            )
+        # ONE action per round: the per-item denominators (ordered fold
+        # over opponent id) and the monotonicity ledger on the ENTERING
+        # grid strengths (ordered fold over pair key) share one shuffle
+        folds = {
+            r["item"]: r
+            for r in both.select(recs.alias("r")).select("r.*")
+            .groupBy("item")
+            .agg(fold("d", "t").alias("D"), fold("l", "v").alias("ll"))
             .collect()
         }
-        raw = {it: wins[it] / dens[it] for it in items}
+        ll_in = folds[None]["ll"]
+        raw = {it: wins[it] / folds[it]["D"] for it in items}
         norm = 0.0
         for it in items:  # ordered fold over item id (driver-side, defined order)
             norm += raw[it]
@@ -533,8 +528,6 @@ def bradley_terry(
         }
         for it in items:
             out_rows.append((rnd, it, cur[it], float(ll_in), iters))
-    from ..sources.lakehouse_util import local_rows_df
-
     return local_rows_df(
         spark,
         out_rows,

@@ -850,14 +850,13 @@ def kneser_ney_logprob(
     )
     from .cache import persist_tracked
 
-    # grams fans into TWO consumers (the c2 bigram census and the
-    # scoring join) — without the persist the split/lower/explode
-    # tokenization re-runs per consumer (round 13; the same fan-in
-    # discipline as c2 below and dedup's rep_docs)
-    grams = persist_tracked(
-        base.select(F.col(id_col), F.explode(pairs).alias("__g")).select(
-            F.col(id_col), F.col("__g.a").alias("a"), F.col("__g.b").alias("b")
-        )
+    # grams is NOT persisted although it fans into two consumers (the c2
+    # census and the scoring join): an interleaved 16-rep A/B at sf0.1 on
+    # 4 cores measured q403 at 0.722 s / 20 jobs with the persist vs
+    # 0.702 s / 18 jobs without, same rows — the persist job costs more
+    # than re-running the split/lower/explode tokenization.
+    grams = base.select(F.col(id_col), F.explode(pairs).alias("__g")).select(
+        F.col(id_col), F.col("__g.a").alias("a"), F.col("__g.b").alias("b")
     )
     c2 = persist_tracked(
         grams.groupBy("a", "b").agg(F.count(F.lit(1)).cast("bigint").alias("c2"))

@@ -22,3 +22,13 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def jobs_of(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` launched.  The DAG scheduler numbers
+    jobs consecutively, so the count is the job-id window around the call
+    (the census ``perfbench/census.py`` takes)."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first = dag.numTotalJobs()
+    fn()
+    return dag.numTotalJobs() - first

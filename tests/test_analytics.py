@@ -1083,9 +1083,10 @@ class TestBradleyTerry:
         # (uniform start)
         assert out[(2, 0)]["ll_in"] > out[(1, 0)]["ll_in"]
 
-    def test_monotone_likelihood_and_ordering_recovery(self, spark):
-        from rust_dataframe_spark.operators.ranking import bradley_terry
-
+    @staticmethod
+    def _ranked_pairs(spark):
+        """380 comparisons over 20 items, strength rising with the index:
+        P(a wins) ~ (a+1)/(a+b+2)."""
         rows = []
         for d in range(400):
             a, b = d % 20, (d // 20 + d + 1) % 20
@@ -1093,7 +1094,12 @@ class TestBradleyTerry:
                 continue
             r = (d * 7919 + 13) % (a + b + 2)
             rows.append((a, b) if r <= a else (b, a))
-        df = spark.createDataFrame(rows, "winner bigint, loser bigint")
+        return spark.createDataFrame(rows, "winner bigint, loser bigint")
+
+    def test_monotone_likelihood_and_ordering_recovery(self, spark):
+        from rust_dataframe_spark.operators.ranking import bradley_terry
+
+        df = self._ranked_pairs(spark)
         out = bradley_terry(df, "winner", "loser", iters=3,
                             quant_scale=1 << 20).collect()
         lls = sorted({r["round"]: r["ll_in"] for r in out}.items())
@@ -1104,6 +1110,26 @@ class TestBradleyTerry:
         bot5 = sorted(final, key=final.get)[:5]
         # fixture strengths rise with item index: P(a wins) ~ (a+1)/(a+b+2)
         assert sum(top5) / 5 > sum(bot5) / 5 + 5
+
+    def test_jobs_per_round(self, spark):
+        """Each MM round is one action: building the frame costs a fixed
+        prelude plus exactly 3 jobs per round (the broadcast of the item
+        strengths, the shuffle map stage, the result stage)."""
+        from conftest import jobs_of
+
+        from rust_dataframe_spark.operators.cache import release
+        from rust_dataframe_spark.operators.ranking import bradley_terry
+
+        df = self._ranked_pairs(spark)
+        counts = []
+        for iters in (1, 2, 3, 4):
+            release(blocking=True)  # a live pair-table persist skips jobs
+            counts.append(jobs_of(
+                spark, lambda: bradley_terry(df, "winner", "loser", iters=iters)
+            ))
+        release(blocking=True)
+        assert [b - a for a, b in zip(counts, counts[1:])] == [3, 3, 3], counts
+        assert counts[1] <= 13, counts
 
     def test_zero_win_item_fails_loud(self, spark):
         import pytest
